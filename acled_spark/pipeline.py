@@ -14,10 +14,16 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import date
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from acled_spark.bronze import typed_cast, write_bronze
-from acled_spark.checks import CheckResult, load_suites, run_checks
+from acled_spark.checks import (
+    CheckResult,
+    load_suites,
+    partition_date_match,
+    run_checks,
+)
 from acled_spark.schema import PARTITION_COL, PRIMARY_KEY
 from acled_spark.silver import upsert_partitioned
 from acled_spark.source import PageFetcher, ingest_day
@@ -56,44 +62,9 @@ def run_day(
     5. keyed silver upsert (the ON CONFLICT contract)
     6. silver validation suite on the day's slice
     """
-    from acled_spark.checks.engine import partition_date_match
-
-    suites = load_suites()
     raw = ingest_day(spark, fetcher, day, limit=page_limit)
-    typed = typed_cast(raw)
-
-    # the blocking per-day check can't live in the static YAML suite
-    # (it parameterizes on THIS run's day): without it a stray
-    # wrong-day row would ride dynamic partition overwrite and REPLACE
-    # that other day's entire directory (ref acled_checks.py:189-246)
-    bronze_suite = list(suites["acled_bronze"]) + [
-        partition_date_match(PARTITION_COL, day)
-    ]
-    bronze_results = run_checks(
-        typed, bronze_suite, raise_on_blocking=raise_on_blocking
-    )
-    write_bronze(typed, bronze_path, mode="overwrite")
-    upsert_partitioned(
-        spark,
-        typed,
-        silver_path,
-        key=PRIMARY_KEY,
-        partition_col=PARTITION_COL,
-    )
-
-    from pyspark.sql import functions as F
-
-    day_slice = spark.read.parquet(silver_path).filter(
-        F.col(PARTITION_COL) == F.lit(day.isoformat()).cast("date")
-    )
-    silver_results = run_checks(
-        day_slice, suites["acled_silver"], raise_on_blocking=raise_on_blocking
-    )
-    return DayRunResult(
-        day=day,
-        rows=typed.count(),
-        bronze_checks=bronze_results,
-        silver_checks=silver_results,
+    return _land_day(
+        spark, typed_cast(raw), day, silver_path, raise_on_blocking, bronze_path
     )
 
 
@@ -113,14 +84,39 @@ def promote_day(
     re-download every day from the API when the rows already sit in the
     bronze table.
     """
-    from pyspark.sql import functions as F
+    typed = _day_slice(spark, bronze_path, day)
+    return _land_day(spark, typed, day, silver_path, raise_on_blocking)
 
-    suites = load_suites()
-    day_lit = F.lit(day.isoformat()).cast("date")
-    typed = spark.read.parquet(bronze_path).filter(F.col(PARTITION_COL) == day_lit)
-    bronze_results = run_checks(
-        typed, suites["acled_bronze"], raise_on_blocking=raise_on_blocking
+
+def _day_slice(spark: SparkSession, path: str, day: date) -> DataFrame:
+    return spark.read.parquet(path).filter(
+        F.col(PARTITION_COL) == F.lit(day.isoformat()).cast("date")
     )
+
+
+def _land_day(
+    spark: SparkSession,
+    typed: DataFrame,
+    day: date,
+    silver_path: str,
+    raise_on_blocking: bool,
+    bronze_path: str | None = None,
+) -> DayRunResult:
+    """Steps 3-6 of :func:`run_day` over one day's typed rows; step 4
+    (the bronze write) only when ``bronze_path`` is given."""
+    suites = load_suites()
+    # the blocking per-day check can't live in the static YAML suite
+    # (it parameterizes on THIS run's day): without it a stray
+    # wrong-day row would ride dynamic partition overwrite and REPLACE
+    # that other day's entire directory (ref acled_checks.py:189-246)
+    bronze_suite = list(suites["acled_bronze"]) + [
+        partition_date_match(PARTITION_COL, day)
+    ]
+    bronze_results = run_checks(
+        typed, bronze_suite, raise_on_blocking=raise_on_blocking
+    )
+    if bronze_path is not None:
+        write_bronze(typed, bronze_path, mode="overwrite")
     upsert_partitioned(
         spark,
         typed,
@@ -128,11 +124,10 @@ def promote_day(
         key=PRIMARY_KEY,
         partition_col=PARTITION_COL,
     )
-    day_slice = spark.read.parquet(silver_path).filter(
-        F.col(PARTITION_COL) == day_lit
-    )
     silver_results = run_checks(
-        day_slice, suites["acled_silver"], raise_on_blocking=raise_on_blocking
+        _day_slice(spark, silver_path, day),
+        suites["acled_silver"],
+        raise_on_blocking=raise_on_blocking,
     )
     return DayRunResult(
         day=day,

@@ -44,10 +44,6 @@ from acled_spark.tables import load
 )
 def f1_try_cast_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON field extraction + try_cast null-on-error (ref base_assets.py:120-131)."""
-    # spread=True (measured opt-in, r14): the per-row JsonPath
-    # evaluation is the dominant CPU and ran single-threaded on the
-    # single-split events scan — same-session A/B at sf0.1:
-    # 0.49s spread vs 1.33s unspread (min of 3).
     ev = load(spark, sf_dir, "events", spread=True)
     # Project the JSON extraction ONCE before aggregating: aggregate
     # children are not subexpression-eliminated, so an inline `k` in both

@@ -101,7 +101,7 @@ _TOKENS_SQL = _tokens_sql()
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts per language (training-data token budget)."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     n_tokens = F.size(_tokens_spark(F.col("text")))
     return (
         docs.select("lang", n_tokens.alias("n_tokens"))
@@ -156,7 +156,7 @@ def _stopword_filter_sql() -> str:
 )
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality heuristics: length/stopword/punct blend."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     toks = _tokens_spark(F.col("text"))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
     n_tokens = F.size(toks)
@@ -217,9 +217,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language-ID heuristic -> confusion counts vs labels."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.55->0.54s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     toks = _tokens_spark(F.col("text"))
     def has_marker(marker: str) -> Column:
         # array_contains, not a filter-HOF scan: native, short-circuit,
@@ -259,9 +257,7 @@ def fingerprint_spark(text: Column) -> Column:
 )
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document normalized fingerprint (dedup key), value-parity checked."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.24->0.22s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", fingerprint_spark(F.col("text")).alias("fingerprint"))
         .orderBy("doc_id")
@@ -359,7 +355,7 @@ def text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair exchange is a fraction of the full shingle index while
     still catching every shared run of >= W+K-1 tokens.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     fp = (
         docs.select("doc_id", gram_hashes_spark(F.col("text")).alias("h"))
         .select("doc_id", F.explode(winnow_mins_spark(F.col("h"))).alias("fp"))
@@ -409,9 +405,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sum-order sensitivity.  Shuffles on (doc_id, word) then doc_id;
     partial aggregation keeps both exchanges narrow.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.78->0.63s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
         F.explode(_tokens_spark(F.lower(F.col("text")))).alias("word"),
@@ -537,7 +531,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound hot keys; here both engines use the raw gram so the oracle
     stays exact.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     ex = docs.select(
         "doc_id",
         "lang",
@@ -686,7 +680,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~n_tok/STRIDE, then a lang-sized rollup; per-chunk work is O(CHUNK)
     and rides whole-stage codegen.
     """
-    c = chunk_stream(load(spark, sf_dir, "documents"))
+    c = chunk_stream(load(spark, sf_dir, "documents", spread=True))
     return (
         c.groupBy("lang")
         .agg(
@@ -734,9 +728,7 @@ def text_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: df is vocabulary-sized (tiny) and broadcast into the score
     join; the only wide shuffle is the (lang, term) partial-agg count.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.19->1.10s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     tok = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         "doc_id",
         "lang",
@@ -851,7 +843,7 @@ def doc_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the fingerprint window for canonicality (16-byte key),
     then a lang-sized rollup.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     n_tok, dr = gate_exprs(F.col("text"))
     d = docs.select(
         "doc_id",
@@ -924,9 +916,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream and aggregates per doc — the only wide exchange is the
     doc_id rollup.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.09->0.94s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     tok = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         "doc_id",
         "lang",
@@ -1035,13 +1025,7 @@ def text_bigram_logprob(
     """
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    # spread=False (r14): with the tokenize-once barrier below, the
-    # corpus text is read and tokenized in ONE pass, so the documents
-    # spread would pay its full-payload round-robin exchange to
-    # parallelize work that no longer repeats — same-session A/B at
-    # sf0.1: 0.45s unspread vs 0.83s spread (and 1.27s spread without
-    # the barrier, the r13 shape).  At 100 TB the gate never fires.
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     arr = F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")
     # ONE tokenize pass (r14): the plan has three consumers of the
     # token arrays (the LM aggregate, the vocabulary count, and the
@@ -1211,12 +1195,7 @@ def drift_vocab_js(
     """
     if support_floor < 1:
         raise ValueError(f"support_floor must be >= 1, got {support_floor}")
-    # spread=False (r14, measured): three scan subtrees re-derive the
-    # token stream here, so the documents spread pays its full-payload
-    # exchange three times for per-pass CPU that is light at the
-    # benched tiers — same-session A/B: 0.76s unspread vs 1.14s
-    # spread.  At 100 TB the gate never fires (multi-file corpus).
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     # NULL source is a legitimate per-source bucket (a crawl that lost
     # its provenance tag; ADVICE r11) — but a null-unsafe equi-join
     # downstream would zero its counts and report the all-absent
@@ -1335,9 +1314,7 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the scan + source-sized rollup, nothing shuffles
     but partial counts.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.58->0.55s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_ws = F.when(F.length(ws_trim(F.col("text"))) == 0, 0).otherwise(
         F.size(F.split(ws_trim(F.col("text")), f"{WS}+"))
     )
@@ -1404,9 +1381,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so the "growth order" is reproducible on any engine or
     cluster size.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.27->1.12s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     h1 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
     ).cast("int")
@@ -1478,9 +1453,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg; the top-ZIPF_TOP cut is a rank window over vocab-sized data;
     the regression runs over ZIPF_TOP rows.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.74->0.53s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     f = (
         docs.filter(F.length(ws_trim(F.col("text"))) > 0)
         .select(F.explode(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")).alias("w"))
@@ -1554,7 +1527,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit-free, so counts here are honest zeros).  Scale: per-document
     codegen expressions riding the scan; one small (lang) rollup.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     text = F.col("text")
     scrubbed = _scrub_pii(text)
     aggs = [F.count("*").alias("docs")]
@@ -1655,7 +1628,9 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality classifier; this extends the LLM-pipeline surface
     (SURVEY.md extended ops).
     """
-    docs = load(spark, sf_dir, "documents").filter(F.length(ws_trim(F.col("text"))) > 0)
+    docs = load(spark, sf_dir, "documents", spread=True).filter(
+        F.length(ws_trim(F.col("text"))) > 0
+    )
     toks = _tokens_spark(F.col("text"))
     d = docs.select(
         "lang",
@@ -1749,7 +1724,7 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated frequencies + AQE-splittable join instead of the
     per-digest window partition.
     """
-    return dup_span_census(load(spark, sf_dir, "documents"))
+    return dup_span_census(load(spark, sf_dir, "documents", spread=True))
 
 
 def dup_span_census(
@@ -1930,11 +1905,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines and partitionings; rank ties break on
     doc_id.
     """
-    # spread=False (r14, measured with the tokenize-once barrier):
-    # 1.43s unspread vs 2.21s spread same-session — the single
-    # tokenize pass no longer repays the full-payload spread exchange,
-    # and the downstream work is vocabulary-filtered (tiny).
-    docs = load(spark, sf_dir, "documents", spread=False).filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.length(ws_trim(F.col("text"))) > 0
     )
     toks_col = _tokens_spark(F.lower(F.col("text")))

@@ -76,28 +76,6 @@ def configure(spark: SparkSession) -> None:
                 raise
 
 
-#: tables whose scans are spread across the session's cores when the
-#: source cannot fill them (single-row-group parquet files split to ONE
-#: scan task no matter the split config, so every downstream map-side
-#: derivation — gram explode, md5, HOF math — runs single-threaded on a
-#: 32-core session; optimization guide §2.5 "one huge unsplittable
-#: file: repartition immediately after the read").
-#:
-#: Only ``documents`` defaults on: its consumers are the CPU-bound
-#: text/dedup family (explode + md5 per gram), where the one-shot
-#: payload exchange buys 3-4x (text_dup_spans 4.7->1.1s,
-#: text_contamination 4.1->1.1s at sf0.1/local[32]).  ``events`` /
-#: ``orders`` / ``lineitem`` consumers are light window/agg/join plans
-#: that shuffle immediately anyway — A/B (same --only session): the
-#: extra exchange cost sess_user_sessions +0.47s, funnel +0.40s, w1
-#: +0.25s and bought nothing, so those tables default OFF and the few
-#: measured winners (j5's fact-side scan, chk_validation_summary's
-#: 31-check evaluation) opt in per call.  ``embeddings`` must stay
-#: unspread everywhere: KMeans' k-means|| init is partition-layout
-#: sensitive, so respreading it would move cell assignments in
-#: sim_ann_ivf / dedup_semantic (a result change, not a speedup).
-SPREAD_TABLES = frozenset({"documents"})
-
 #: source-size cache for the spread gate (one os.stat per (dir, table)
 #: per process, not per load call)
 _scan_bytes: dict[str, int] = {}
@@ -106,13 +84,7 @@ _scan_bytes: dict[str, int] = {}
 def _spread_partitions(spark: SparkSession, path: str) -> int:
     """Partition count a gated spread should produce: the session's
     default parallelism when the file set cannot fill it, else 0 (keep
-    the scan's natural splits).  The gate is computed from the source
-    SIZE, not a hard-coded core count, so it adapts to the session
-    (the driver benches at several core counts) and becomes a no-op on
-    a real multi-file corpus whose scan already parallelizes — at the
-    100 TB design point this never fires and no payload is shuffled."""
-    if os.environ.get("SPARK_GRAFT_SPREAD") == "0":  # A/B kill-switch
-        return 0
+    the scan's natural splits)."""
     size = _scan_bytes.get(path)
     if size is None:
         try:
@@ -136,19 +108,36 @@ def _spread_partitions(spark: SparkSession, path: str) -> int:
 
 
 def load(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
     """Load one testdata table, normalized for engine parity.
 
-    ``spread``: round-robin repartition the scan to the session's core
-    count when the source is too small to split naturally (see
-    ``SPREAD_TABLES``).  Default (None) spreads the tables in
-    ``SPREAD_TABLES``; pass False for consumers whose output depends on
-    partition layout (a26's GK quantile sketch merges) and True to
-    opt a non-default table in.  Round-robin (not keyed): the plan
-    shows it as RoundRobinPartitioning — distinguishable from the
-    query's own exchanges — and sort-before-repartition (on by
-    default) keeps the assignment deterministic across retries.
+    A spread load round-robin repartitions the scan to the session's
+    default parallelism when the source is too small to split naturally.
+    A single-row-group parquet file is ONE scan task whatever the split
+    config, so every map-side derivation after it (gram explode, md5,
+    per-row JsonPath or HOF math) runs single-threaded however many
+    cores the session has; spreading right after the read is the
+    standard fix for one unsplittable file.  It pays only where that
+    per-row work is heavy enough to repay the full-payload exchange:
+    the text/dedup gram families (3-4x on text_dup_spans and
+    text_contamination at sf0.1 on 32 cores), f1's JsonPath
+    extraction and j5's fact-side scans.  Light window/agg/join plans
+    shuffle right away anyway and the extra exchange is pure cost, so
+    the default is off and each winner opts in at its call site.
+
+    The gate is the source SIZE, not a core count: it adapts to the
+    session's parallelism and is a no-op once the natural splits can
+    fill the cores, so a multi-file corpus at the 100 TB design point
+    never spreads and never shuffles its payload.
+
+    Never spread where partition layout reaches the result:
+    ``embeddings`` (KMeans' k-means|| init would move cell assignments
+    in sim_ann_ivf / dedup_semantic) and a26's GK sketch merges.
+    Round-robin, not keyed: the plan shows it as RoundRobinPartitioning,
+    distinguishable from the query's own exchanges, and
+    sort-before-repartition (on by default) keeps the assignment
+    deterministic across retries.
     """
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -158,17 +147,11 @@ def load(
         df = df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)")
         )
-    if spread is None:
-        spread = name in SPREAD_TABLES
     if spread:
         n = _spread_partitions(spark, path)
         if n:
             df = df.repartition(n)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:

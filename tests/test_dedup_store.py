@@ -21,7 +21,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture()
 def store(spark, tmp_path):
     root = str(tmp_path / "sigstore")
-    corpus = load(spark, SF_DIR, "documents").filter(F.col("doc_id") < 60)
+    corpus = load(spark, SF_DIR, "documents", spread=True).filter(F.col("doc_id") < 60)
     init_store(corpus, root)
     return root, corpus
 
@@ -165,13 +165,13 @@ def test_incremental_agrees_with_global_exact_dedup(spark, store):
     exact-dedup verdict: a batch doc is exact-dup iff its fingerprint
     group in the FULL corpus contains a store doc."""
     root, corpus = store
-    batch = load(spark, SF_DIR, "documents").filter(
+    batch = load(spark, SF_DIR, "documents", spread=True).filter(
         (F.col("doc_id") >= 60) & (F.col("doc_id") < 120)
     )
     v = check_batch(spark, batch, root)
     from acled_spark.queries.text import fingerprint_spark
 
-    full = load(spark, SF_DIR, "documents").select(
+    full = load(spark, SF_DIR, "documents", spread=True).select(
         "doc_id", fingerprint_spark(F.col("text")).alias("fp")
     )
     store_fps = {
@@ -316,7 +316,7 @@ def test_bucketed_table_store_matches_path_store_and_avoids_store_shuffle(
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     try:
         init_store(corpus, troot)
-        batch = load(spark, SF_DIR, "documents").filter(
+        batch = load(spark, SF_DIR, "documents", spread=True).filter(
             (F.col("doc_id") >= 60) & (F.col("doc_id") < 120)
         )
         key = lambda rows: sorted(tuple(r) for r in rows)

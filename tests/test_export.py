@@ -34,7 +34,7 @@ def _doc_set(df):
 
 def test_jsonl_roundtrip_exact(spark, tmp_path):
     out = os.path.join(str(tmp_path), "docs_jsonl")
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     write_jsonl(docs, out, shards=4, sort_col="doc_id")
     back = read_jsonl(spark, out, DOC_SCHEMA)
     assert _doc_set(back) == _doc_set(docs)
@@ -42,7 +42,7 @@ def test_jsonl_roundtrip_exact(spark, tmp_path):
 
 def test_jsonl_sharding_deterministic(spark, tmp_path):
     """Same input -> byte-identical shard contents across re-runs."""
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
 
     def shard_lines(path):
         out = {}
@@ -102,7 +102,7 @@ def test_manifest_roundtrip_and_corruption_detection(spark, tmp_path):
         write_manifest,
     )
 
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     out = str(tmp_path / "export")
     write_jsonl(docs, out, shards=4, sort_col="doc_id", compression="none")
 
@@ -177,7 +177,7 @@ def test_truncated_gzip_shard_reports_unreadable(spark, tmp_path):
     per-shard fallback isolates the undecodable file."""
     from acled_spark.export import verify_manifest, write_manifest
 
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     out = str(tmp_path / "gz_export")
     write_jsonl(docs, out, shards=3, sort_col="doc_id")  # gzip default
     write_manifest(read_jsonl(spark, out, DOC_SCHEMA), out)
@@ -203,7 +203,7 @@ def test_partitioned_export_manifest(spark, tmp_path):
     intact."""
     from acled_spark.export import shard_manifest, verify_manifest, write_manifest
 
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     out = str(tmp_path / "by_lang")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
 
@@ -234,7 +234,7 @@ def test_shuffled_export_is_stable_and_randomized(spark, tmp_path):
     """A seed-shuffled export reproduces byte-identical shards across
     re-runs, holds exactly the input rows, breaks the input order, and
     re-orders under a different seed."""
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
 
     def shard_texts(path):
         out = {}
@@ -268,7 +268,7 @@ def test_partitioned_fallback_isolates_corrupt_file(spark, tmp_path):
     every intact shard)."""
     from acled_spark.export import verify_manifest, write_manifest
 
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     out = str(tmp_path / "by_lang2")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
 
@@ -291,7 +291,7 @@ def test_partitioned_fallback_isolates_corrupt_file(spark, tmp_path):
 def test_shuffle_rejects_colliding_columns(spark):
     from acled_spark.queries.packing import shuffle_assignment
 
-    docs = load(spark, SF_DIR, "documents").withColumn("pos", F.lit(1))
+    docs = load(spark, SF_DIR, "documents", spread=True).withColumn("pos", F.lit(1))
     with pytest.raises(ValueError, match="collide"):
         shuffle_assignment(docs)
 
@@ -335,7 +335,7 @@ def test_hash_shard_branch_rejects_temp_column_collision(spark, tmp_path):
     """Round-7 review: the shards+sort_col branch silently clobbered
     and dropped an input column named __range_shard; it must raise like
     the shuffle branch does for its temps."""
-    docs = load(spark, SF_DIR, "documents").limit(10).withColumn(
+    docs = load(spark, SF_DIR, "documents", spread=True).limit(10).withColumn(
         "__range_shard", F.lit(1)
     )
     with pytest.raises(ValueError, match="__range_shard"):
@@ -349,7 +349,7 @@ def test_verify_manifest_catches_appended_garbage(spark, tmp_path):
     as unparseable_lines."""
     from acled_spark.export import verify_manifest, write_manifest
 
-    docs = load(spark, SF_DIR, "documents").limit(20)
+    docs = load(spark, SF_DIR, "documents", spread=True).limit(20)
     out = str(tmp_path / "exp")
     write_jsonl(docs, out, shards=2, sort_col="doc_id", compression="none")
     back = read_jsonl(spark, out, DOC_SCHEMA)
@@ -382,7 +382,7 @@ def test_text_pass_only_failure_surfaces_as_problem(spark, tmp_path, monkeypatch
     from acled_spark import fsutil
     from acled_spark.export import verify_manifest, write_manifest
 
-    docs = load(spark, SF_DIR, "documents").limit(30)
+    docs = load(spark, SF_DIR, "documents", spread=True).limit(30)
     out = str(tmp_path / "tp_export")
     write_jsonl(docs, out, shards=2, sort_col="doc_id")
     write_manifest(read_jsonl(spark, out, DOC_SCHEMA), out)

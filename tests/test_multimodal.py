@@ -19,7 +19,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_payload_schema_and_metadata(spark):
-    media = attach_payloads(load(spark, SF_DIR, "documents"))
+    media = attach_payloads(load(spark, SF_DIR, "documents", spread=True))
     assert dict(media.dtypes) == {
         "doc_id": "bigint",
         "payload": "binary",
@@ -30,12 +30,8 @@ def test_payload_schema_and_metadata(spark):
     assert row["meta"]["mime"] == "text/plain"
 
 
-    # spread=False in the limit-corpus loads of this file: the tests
-    # pin doc subsets via limit(N) over the natural row order and
-    # compare across separate evaluations; the round-robin spread
-    # reorders rows ahead of the limit (r14)
 def test_extract_features_matches_local_compute(spark):
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(20)
+    docs = load(spark, SF_DIR, "documents").limit(20)
     feats = {
         r["doc_id"]: r for r in extract_features(attach_payloads(docs)).collect()
     }
@@ -193,7 +189,7 @@ def test_resize_geometry_invariants(spark):
     every output side fits max_side."""
     from acled_spark.multimodal import attach_payloads, fake_decode, resize_images
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(50)
+    docs = load(spark, SF_DIR, "documents").limit(50)
     media = attach_payloads(docs)
     out = resize_images(media, max_side=100).collect()
     assert len(out) == 50
@@ -215,7 +211,7 @@ def test_sample_frames_fanout_and_determinism(spark):
         sample_frames,
     )
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(20)
+    docs = load(spark, SF_DIR, "documents").limit(20)
     media = attach_payloads(docs)
     frames = sample_frames(media, every=3)
     rows = frames.collect()
@@ -254,7 +250,7 @@ def test_extract_features_rejects_colliding_passthrough(spark):
     from acled_spark.tables import load
     from tests.conftest import SF_DIR
 
-    media = attach_payloads(load(spark, SF_DIR, "documents"))
+    media = attach_payloads(load(spark, SF_DIR, "documents", spread=True))
     with pytest.raises(ValueError, match="collide"):
         extract_features(media, passthrough=("n_bytes",))
     with pytest.raises(ValueError, match="collide"):
@@ -270,7 +266,7 @@ def test_attach_payloads_matches_documented_media_schema(spark):
 
     from acled_spark.multimodal import MEDIA_SCHEMA, attach_payloads
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(3)
+    docs = load(spark, SF_DIR, "documents").limit(3)
     got = attach_payloads(docs).schema
     want = _parse_datatype_string(MEDIA_SCHEMA)
     assert [
@@ -355,7 +351,7 @@ def test_phash_worker_hash_matches_pure_python_reference(spark):
 
     docs = {
         r["doc_id"]: r["text"]
-        for r in load(spark, "/root/testdata/sf0.001", "documents")
+        for r in load(spark, SF_DIR, "documents", spread=True)
         .orderBy("doc_id").limit(6).collect()
         if r["text"]
     }

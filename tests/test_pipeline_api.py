@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from acled_spark.checks import ValidationError
-from acled_spark.pipeline import run_day
+from acled_spark.pipeline import promote_day, run_day
 from tests.test_acled_pipeline import make_fetcher
 
 
@@ -61,6 +61,43 @@ def test_run_day_blocking_check_halts(spark, tmp_path):
             os.path.join(str(tmp_path), "b"), os.path.join(str(tmp_path), "s"),
             page_limit=5000,
         )
+
+
+def _silver_digest(spark, path: str) -> tuple[int, int]:
+    """(rows, order-free content hash) of a silver table."""
+    df = spark.read.parquet(path)
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def test_promote_day_matches_run_day(spark, tmp_path):
+    """A bronze-only backfill promoted to silver lands what run_day
+    writes for the same fetcher and day, and a second promote is a
+    no-op on silver."""
+    from acled_spark.scheduler import run_backfill
+
+    day = date(2025, 3, 1)
+    fetcher = make_fetcher(rows_per_day=30, page_cap=50)
+    bronze = str(tmp_path / "bronze")
+    silver = str(tmp_path / "silver")
+    assert run_backfill(spark, fetcher, bronze, [day], limit=50) == [day]
+
+    res = promote_day(spark, day, bronze, silver)
+    assert res.rows == 30 and res.passed
+    assert "partition_date_match[event_date]" in {c.name for c in res.bronze_checks}
+    promoted = _silver_digest(spark, silver)
+
+    ref_silver = str(tmp_path / "ref_silver")
+    ref_bronze = str(tmp_path / "ref_bronze")
+    run_day(spark, fetcher, day, ref_bronze, ref_silver, page_limit=50)
+    assert promoted[0] == 30
+    assert promoted == _silver_digest(spark, ref_silver)
+
+    assert promote_day(spark, day, bronze, silver).passed
+    assert _silver_digest(spark, silver) == promoted
 
 
 def test_cli_sql_subcommand(spark, capsys):

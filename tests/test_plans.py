@@ -140,7 +140,7 @@ def test_canonical_pick_single_scan_no_text_in_shuffle(spark):
     carry the digest + scalars, never the document text.
 
     The one exemption is the scan-spread's RoundRobinPartitioning
-    exchange (tables.SPREAD_TABLES): it moves the payload exactly once,
+    exchange (tables.load's spread): it moves the payload exactly once,
     scan-side, before any derivation — the guide-§8 "heavy bytes move
     once" shape — and is gated off on any corpus whose scan already
     parallelizes.  Every KEYED exchange must still be text-free."""
@@ -428,7 +428,7 @@ def _shuffle_input_attrs(df) -> list[list[str]]:
             return
         if "ShuffleExchange" in name:
             # the scan-spread's RoundRobinPartitioning exchange
-            # (tables.SPREAD_TABLES) is exempt: it moves the payload
+            # (tables.load's spread) is exempt: it moves the payload
             # exactly once, scan-side, before any derivation, and is
             # gated off on any corpus whose scan already parallelizes.
             # Every KEYED exchange is still audited.

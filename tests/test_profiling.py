@@ -65,7 +65,7 @@ def test_bounded_natural_corpus_recommends_no_cap(spark):
     """sf0.001 natural documents: bounded df and bucket tails — the
     advisor must NOT recommend a cap (a no-op cap still pays its
     df-window shuffle, the measured +25% lesson)."""
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     assert profile_caps(docs).recommended_cap is None
     assert profile_buckets(minhash_bands_spark(docs)).recommended_cap is None
 
@@ -108,7 +108,7 @@ def test_sf1_profiles_reproduce_measured_tables(spark):
     (29,695 / max 79 / p99.9 30) and no cap on either knob.  Planted
     5000-doc skew (the round-7 measurement's construction): a cap
     inside the measured-good [100, 1000] band."""
-    docs = load(spark, HEAVY_DIR, "documents")
+    docs = load(spark, HEAVY_DIR, "documents", spread=True)
     pb = profile_buckets(minhash_bands_spark(docs))
     assert (pb.n_keys, pb.max_size, pb.p999) == (29695, 79, 30)
     assert pb.recommended_cap is None

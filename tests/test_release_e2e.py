@@ -37,7 +37,7 @@ DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long
 
 
 def test_incremental_release_end_to_end(spark, tmp_path):
-    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS)
+    docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS)
 
     # --- the release: modulus-derived old/new snapshots + one planted
     # added doc whose text exactly duplicates a surviving old doc
@@ -158,7 +158,7 @@ def test_retire_ids_store_roundtrip(spark, tmp_path):
     staged swap leaves a readable store (no leftover staging dir)."""
     from acled_spark.dedup_store import _read_bands, _read_exact
 
-    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(50)
+    docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS).limit(50)
     store = str(tmp_path / "s")
     init_store(docs, store)
     n0 = _read_exact(spark, store).count()
@@ -190,7 +190,7 @@ def test_retire_ids_table_backend(spark):
     for t in ("retire_t_exact", "retire_t_bands"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     try:
-        docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(40)
+        docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS).limit(40)
         init_store(docs, troot)
         n0 = _read_exact(spark, troot).count()
 
@@ -294,12 +294,8 @@ def test_recover_store_promotes_committed_staging_only(spark, tmp_path):
         recover_store,
     )
 
-    # spread=False: the test assumes limit(30) takes the file's natural
-    # row order (so doc_id < 10 rows are present and the >= 10 filter
-    # actually shrinks the corpus); the round-robin spread reorders
-    # rows ahead of the limit
     docs = (
-        load(spark, SF_DIR, "documents", spread=False)
+        load(spark, SF_DIR, "documents")
         .select(*DOC_COLS)
         .limit(30)
     )
@@ -356,7 +352,7 @@ def test_corpus_release_api_matches_manual_composition(spark, tmp_path):
     from acled_spark.drift import init_reference
     from acled_spark.release import CorpusRelease
 
-    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS)
+    docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS)
     old = docs.filter(F.col("doc_id") % 11 != 3)
     new = docs.filter(F.col("doc_id") % 13 != 5).withColumn(
         "text",
@@ -410,7 +406,7 @@ def test_release_guards_and_export_reconciliation(spark, tmp_path, monkeypatch):
     from acled_spark.drift import init_reference
     from acled_spark.release import CorpusRelease
 
-    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(40)
+    docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS).limit(40)
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs
 
@@ -465,12 +461,8 @@ def test_removed_then_readded_text_survives_release(spark, tmp_path):
     from acled_spark.export import read_jsonl
     from acled_spark.release import CorpusRelease
 
-    # spread=False: the test pins doc_id 7 inside its 40-doc corpus,
-    # which relies on limit(40) taking the file's natural row order —
-    # the round-robin spread reorders rows ahead of the limit and was
-    # silently swapping the subset out from under the pin
     docs = (
-        load(spark, SF_DIR, "documents", spread=False)
+        load(spark, SF_DIR, "documents")
         .select(*DOC_COLS)
         .limit(40)
     )
@@ -514,7 +506,7 @@ def test_release_verification_crash_reports_not_raises(spark, tmp_path, monkeypa
     from acled_spark import export as export_mod
     from acled_spark.release import CorpusRelease
 
-    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS)
+    docs = load(spark, SF_DIR, "documents", spread=True).select(*DOC_COLS)
     old = docs.filter(F.col("doc_id") % 11 != 3)
     new = docs
 

@@ -160,7 +160,7 @@ def test_dedup_maintainer_exactly_once_across_crash_restart(spark, tmp_path):
     from acled_spark.dedup_store import DedupMaintainer, init_store
 
     root = str(tmp_path / "sigstore")
-    corpus = load(spark, SF_DIR, "documents").filter(F.col("doc_id") < 40)
+    corpus = load(spark, SF_DIR, "documents", spread=True).filter(F.col("doc_id") < 40)
     init_store(corpus, root)
     n0 = spark.read.parquet(f"{root}/exact").count()
 
@@ -227,7 +227,7 @@ def test_dedup_maintainer_replay_verdict_dup_of_points_at_store(spark, tmp_path)
     from acled_spark.dedup_store import DedupMaintainer, init_store
 
     root = str(tmp_path / "sigstore")
-    corpus = load(spark, SF_DIR, "documents").filter(F.col("doc_id") < 40)
+    corpus = load(spark, SF_DIR, "documents", spread=True).filter(F.col("doc_id") < 40)
     init_store(corpus, root)
 
     t1 = "crash window canonical text that must survive exactly once here"

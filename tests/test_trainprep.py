@@ -27,7 +27,7 @@ def _naive_ngrams(text, n):
 @pytest.mark.parametrize("n", [2, 3, 4, 5, 7, 8, 9])
 def test_ngram_doubling_equals_naive_chain(spark, n):
     """The O(log n) doubling construction must equal the linear chain."""
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     bad = (
         docs.select(
             F.array_sort(word_ngrams_spark(F.col("text"), n)).alias("fast"),
@@ -124,7 +124,7 @@ def test_shuffle_assignment_is_deterministic_permutation(spark):
     re-runs, actually order-randomizing, and seed-sensitive."""
     from acled_spark.queries.packing import N_SHUFFLE_SHARDS, shuffle_assignment
 
-    docs = load(spark, SF_DIR, "documents").select("doc_id")
+    docs = load(spark, SF_DIR, "documents", spread=True).select("doc_id")
     a1 = sorted(shuffle_assignment(docs).collect())
     a2 = sorted(shuffle_assignment(docs).collect())
     assert a1 == a2  # same seed -> identical permutation
@@ -158,7 +158,7 @@ def test_dup_span_census_skew_safe_equivalence(spark):
     with a planted hot span (1000 docs sharing one boilerplate gram)."""
     from acled_spark.queries.text import dup_span_census
 
-    docs = load(spark, SF_DIR, "documents")
+    docs = load(spark, SF_DIR, "documents", spread=True)
     base = [tuple(r) for r in dup_span_census(docs).collect()]
     safe = [tuple(r) for r in dup_span_census(docs, skew_safe=True).collect()]
     assert sorted(base) == sorted(safe)
@@ -190,7 +190,7 @@ def test_dup_span_census_rejects_materialize_without_skew_safe(spark):
 
     from acled_spark.queries.text import dup_span_census
 
-    docs = load(spark, SF_DIR, "documents").limit(5)
+    docs = load(spark, SF_DIR, "documents", spread=True).limit(5)
     with _pytest.raises(ValueError, match="skew_safe"):
         dup_span_census(docs, skew_safe=False, materialize=True)
 

@@ -43,7 +43,7 @@ def main(out_dir: str = ".benchdata/sf1") -> None:
 
     k = F.explode(F.sequence(F.lit(0), F.lit(COPIES - 1))).alias("k")
 
-    docs = load(spark, SF01, "documents").select("*", k)
+    docs = load(spark, SF01, "documents", spread=True).select("*", k)
     # k>0: replace the last word with a per-copy variant token — one
     # shingle's worth of difference, everything else shared
     mutated = F.when(F.col("k") == 0, F.col("text")).otherwise(

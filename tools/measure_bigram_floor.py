@@ -53,7 +53,7 @@ def plant_tail(spark, heavy_dir: str, out_dir: str) -> str:
 
     from acled_spark.tables import load
 
-    natural = load(spark, heavy_dir, "documents")
+    natural = load(spark, heavy_dir, "documents", spread=True)
     # token j of planted doc i = md5(i:j) hex — unique across the corpus
     # with overwhelming probability, so every planted bigram is hapax
     toks = F.transform(
@@ -88,7 +88,7 @@ def measure_tier(spark, label: str, sf_dir: str) -> None:
     )
     from acled_spark.tables import load
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     print(f"\n==== tier: {label} ({docs.count()} docs) ====")
 
     # LM-table size per floor, counted once (the artifact the floor cuts)

@@ -33,7 +33,7 @@ def run_codec(spark, sf_dir: str, codec: str) -> tuple[int, float]:
     from acled_spark.tables import load
 
     docs = (
-        load(spark, sf_dir, "documents")
+        load(spark, sf_dir, "documents", spread=True)
         .filter(
             F.col("text").isNotNull()
             & (F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0)

@@ -28,7 +28,7 @@ def measure(spark, label, sf_dir):
     from acled_spark.queries.dedup import dedup_ngram_novelty, shingles_spark
     from acled_spark.tables import load
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     print(f"\n==== tier: {label} ({docs.count()} docs) ====")
     df_per_gram = (
         docs.select(F.explode(shingles_spark(F.col("text"))).alias("s"))
